@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: q1-style pricing summary
     (scan → filter → hash-agg partial+final → sort). Driver checks rows>0.
     Delegates to flagship.pricing_summary — ONE definition of the flagship
-    shared with bench.py, so the two can't drift."""
+    shared with perfbench's query workload, so the two can't drift."""
     from wikidata2pg_spark.flagship import pricing_summary
 
     configure_session(spark)

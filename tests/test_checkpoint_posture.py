@@ -1,14 +1,18 @@
-"""r11 (VERDICT r10 task 6): the iterative family's plan-truncation points
-go through ``util.truncate_plan`` — ``localCheckpoint`` by default (cheap,
-but lineage-severing: an executor loss fails the job), switchable to the
-fault-tolerant ``DataFrame.checkpoint`` API for cluster deployments via
+"""Every plan-truncation point goes through ``util.truncate_plan`` —
+``localCheckpoint`` by default (cheap, but lineage-severing: an executor
+loss fails the job), switchable to the fault-tolerant
+``DataFrame.checkpoint`` API for cluster deployments via
 ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``. These tests pin that the env switch
-selects the API, and that the reliable path really executes.
+selects the API, that the reliable path really executes, and that it
+refuses to run without a configured checkpoint directory.
 """
 
 from __future__ import annotations
 
 from unittest import mock
+
+import pytest
+from pyspark import SparkContext
 
 from wikidata2pg_spark import util
 
@@ -31,11 +35,24 @@ def test_truncate_plan_env_selects_reliable_checkpoint(spark, monkeypatch, tmp_p
 
 def test_truncate_plan_reliable_path_executes(spark, monkeypatch, tmp_path):
     """Not just API selection: the reliable path must produce the same
-    rows and a truncated (source-free) plan, with the checkpoint dir
-    auto-provisioned when the session has none configured."""
+    rows and a truncated (source-free) plan."""
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt2"))
     out = util.truncate_plan(spark.range(5))
     assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Range" not in plan  # lineage truncated: scan of the ckpt RDD
+
+
+def test_truncate_plan_reliable_without_checkpoint_dir_raises(spark, monkeypatch):
+    """With the switch on and no checkpoint dir configured, truncate_plan
+    must raise instead of checkpointing to driver-local disk (not shared
+    storage on a cluster). The probe is mocked: the shared session may
+    already carry a dir set by an earlier test, and Spark cannot unset it."""
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    df = spark.range(3)
+    with mock.patch.object(SparkContext, "getCheckpointDir", return_value=None), \
+         mock.patch.object(type(df), "checkpoint", autospec=True) as ck:
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            util.truncate_plan(df)
+        assert not ck.called

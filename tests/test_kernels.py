@@ -9,6 +9,7 @@ shape, not the values).
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -440,3 +441,23 @@ def test_skewkurt_matches_builtin(spark):
     assert set(got) == set(ref)
     for k, (sk, ku) in got.items():
         assert abs(sk - ref[k][0]) < 5e-4 and abs(ku - ref[k][1]) < 5e-4, (k, got[k], ref[k])
+
+
+def test_min_label_components_path_graph_and_round_bound(spark):
+    """Min-label propagation on the 4-node path 1-2-3-4 (plus isolated 5)
+    needs 3 changing rounds and a 4th to see the fixpoint: with that
+    budget every path node gets label 1; with 2 rounds the kernel must
+    raise naming its caller, never return a half-propagated labelling."""
+    from wikidata2pg_spark.operators.graph import min_label_components
+
+    pairs = [(1, 2), (2, 3), (3, 4)]
+    sym = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "a BIGINT, b BIGINT"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "id BIGINT")
+    got = min_label_components(nodes, sym, "path-test", max_rounds=4)
+    assert sorted(map(tuple, got.collect())) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 5)
+    ]
+    with pytest.raises(RuntimeError, match="^path-test: .*within 2 rounds"):
+        min_label_components(nodes, sym, "path-test", max_rounds=2)

@@ -1,19 +1,14 @@
-"""Round-4 robustness regressions: the events-ts dtype branch, the bench
-mid-rep watchdog, write-once fixture reuse, bucketed-table re-registration,
-and the size-derived similarity block formulas (VERDICT r3 items 1/4/7)."""
+"""Round-4 robustness regressions: the events-ts dtype branch, write-once
+fixture reuse, bucketed-table re-registration, and the size-derived
+similarity block formulas (VERDICT r3 items 1/4/7)."""
 
 from __future__ import annotations
 
 import json
 import math
 import os
-import time
-
-import pytest
 
 from tests.conftest import SF_SMOKE
-
-import bench as bench_mod
 
 
 def test_events_ts_loads_as_timestamp(spark):
@@ -44,58 +39,8 @@ def test_events_ts_nanos_fixture_still_converts(spark, tmp_path):
     assert e.count() == 3
 
 
-def test_bench_watchdog_cancels_hung_rep(spark):
-    """A rep that exceeds the remaining per-query budget must raise the
-    typed BudgetExceeded (watchdog's own cancel flag, not inferred from
-    elapsed time — ADVICE r5) rather than block the bench (r1 incident)."""
-    df = spark.range(0, 1 << 33, 1, 4).selectExpr(
-        "sum(length(sha2(cast(id as string), 256))) as s"
-    )
-    t0 = time.time()
-    with pytest.raises(bench_mod.BudgetExceeded):
-        bench_mod.materialize_with_deadline(spark, df, "watchdog-test", 2.0)
-    assert time.time() - t0 < 60
 
 
-def test_bench_real_failure_is_not_a_budget_hit(spark):
-    """The converse classification (ADVICE r5): a genuine query failure
-    must propagate as itself, never as BudgetExceeded — classification
-    keys on the watchdog's cancel flag, not on whether the clock has
-    expired by the time the exception is inspected."""
-    df = spark.range(1).selectExpr("assert_true(id > 0) as x")
-    with pytest.raises(Exception) as ei:
-        bench_mod.materialize_with_deadline(spark, df, "watchdog-realerr", 30.0)
-    assert not isinstance(ei.value, bench_mod.BudgetExceeded)
-
-
-def test_bench_post_expiry_cancel_worded_failure_not_mislabeled(
-    monkeypatch, spark
-):
-    """ADVICE r6: a genuine failure that lands AFTER the watchdog fired
-    and whose message merely mentions cancellation (but is not THIS job
-    group's kill — Spark's kill reason embeds the group name) must
-    propagate as itself, not be published as a budget hit with partial
-    medians."""
-
-    def fake_materialize(df):
-        time.sleep(0.3)  # let the watchdog fire first
-        raise RuntimeError("stage cancelled by resource manager")
-
-    monkeypatch.setattr(bench_mod, "materialize", fake_materialize)
-    with pytest.raises(RuntimeError):
-        bench_mod.materialize_with_deadline(
-            spark, spark.range(1), "watchdog-postexp", 0.01
-        )
-
-
-def test_bench_watchdog_passthrough(spark):
-    """A fast rep under budget completes normally and the timer is torn
-    down (no delayed cancellation bleeding into later jobs)."""
-    bench_mod.materialize_with_deadline(
-        spark, spark.range(10).selectExpr("sum(id) as s"), "watchdog-fast", 30.0
-    )
-    # a follow-up job on the same session must not get cancelled
-    assert spark.range(5).count() == 5
 
 
 def test_custom_datasink_reuses_committed_dir(spark):
@@ -535,160 +480,3 @@ def test_custom_stream_source_marker_loss_converges(spark):
     after = _rows_sorted(fn(spark, SF_T2))
     assert after == before
     assert os.path.exists(marker), "rerun must republish the marker"
-
-
-def test_scale_fixture_tables_disjoint_keys_and_row_groups(tmp_path):
-    """The scaled-bench fixture (VERDICT r6 task 4) must scale LINEARLY:
-    every replica's keys live in a disjoint range (join fan-outs and
-    group counts scale by the factor, never by its square), dimension
-    tables copy through unchanged, and each output file carries multiple
-    row groups so single-file scans still parallelize."""
-    import pyarrow.parquet as pq
-
-    from wikidata2pg_spark.util import scale_fixture_tables
-
-    src = SF_SMOKE
-    rows = scale_fixture_tables(
-        src, str(tmp_path), 3, row_groups=4,
-        tables=["lineitem", "orders", "customer", "nation"],
-    )
-    li0 = pq.read_table(f"{src}/lineitem.parquet")
-    o0 = pq.read_table(f"{src}/orders.parquet")
-    li = pq.read_table(f"{tmp_path}/lineitem.parquet")
-    o = pq.read_table(f"{tmp_path}/orders.parquet")
-    c = pq.read_table(f"{tmp_path}/customer.parquet")
-    assert rows["lineitem"] == 3 * li0.num_rows == li.num_rows
-    assert rows["nation"] == 25  # dimension copies through
-    # replica key ranges are disjoint: distinct counts scale exactly
-    import pyarrow.compute as pc
-
-    def nuniq(t, col):
-        return len(pc.unique(t.column(col)))
-
-    assert nuniq(li, "l_orderkey") == 3 * nuniq(li0, "l_orderkey")
-    assert nuniq(o, "o_orderkey") == 3 * nuniq(o0, "o_orderkey")
-    assert nuniq(o, "o_custkey") == 3 * nuniq(o0, "o_custkey")
-    # FK edges stay aligned: every lineitem orderkey exists in orders
-    lks = set(pc.unique(li.column("l_orderkey")).to_pylist())
-    oks = set(pc.unique(o.column("o_orderkey")).to_pylist())
-    assert lks <= oks
-    # and customer covers orders' custkeys
-    cks = set(pc.unique(c.column("c_custkey")).to_pylist())
-    assert set(pc.unique(o.column("o_custkey")).to_pylist()) <= cks
-    # multiple row groups per output file
-    assert pq.ParquetFile(f"{tmp_path}/lineitem.parquet").metadata.num_row_groups >= 3
-
-
-def test_bench_steal_sample_reads_proc_stat():
-    """The r10 steal field: two bench windows were corrupted by host
-    steal at loadavg ~0, so calibration now carries steal_cores_avg.
-    On Linux the sampler must return a non-negative, monotonically
-    non-decreasing counter; elsewhere it degrades to None."""
-    a = bench_mod._steal_jiffies()
-    if a is None:  # non-Linux fallback contract
-        return
-    assert isinstance(a, int) and a >= 0
-    b = bench_mod._steal_jiffies()
-    assert b >= a
-
-
-def test_bench_compact_line_fits_driver_tail_capture():
-    """BENCH_r07 regression: the driver records only the last 2000 chars
-    of bench stdout, and r7's full-result line outgrew it (parsed: null —
-    the round's primary numbers were lost). The compact line must carry
-    the primary medians verbatim, the scaled/multifile summaries, and fit
-    with margin; the full structure goes to BENCH_DETAIL.json."""
-    qnames = [
-        "q1_pricing", "join3_top10", "topk_per_group", "rollup",
-        "asof_join", "tumbling_1h", "json_events_agg", "tfidf",
-        "cosine_topk",
-    ]
-    queries = {n: 0.1234 for n in qnames}
-    scaled_q = {n: 1.2345 for n in qnames if n != "cosine_topk"}
-    full = {
-        "metric": "bench_total_median_s",
-        "value": 2.9876,
-        "unit": "sec",
-        "queries": queries,
-        "sf": "/root/testdata/sf0.1",
-        "multifile": {
-            "queries": queries,
-            "total_s": 2.5,
-            "lineitem_scan_tasks": 8,
-            "n_files_per_table": 8,
-        },
-        "scaled": {
-            "factor": 10,
-            "rows": {"lineitem": 6001215},
-            "queries": scaled_q,
-            "total_s": 5.12,
-            "lineitem_scan_tasks": 54,
-            "excluded": {"cosine_topk": "x" * 300},
-            "sched": {n: {"jobs": 3, "stages": 7} for n in scaled_q},
-            "duckdb_ms_4threads": {n: 123.45 for n in scaled_q},
-            "duckdb_ms_equal_cores": {n: 61.7 for n in scaled_q},
-            "ratio_vs_duckdb_4t": {n: 12.34 for n in scaled_q},
-            "ratio_adj_4t": {n: 11.22 for n in scaled_q},
-            "fixed_ms_est": {n: 133.0 for n in scaled_q},
-            "note": "y" * 500,
-        },
-        # worst case: the r10 contention gate FIRED and the box never
-        # confirmed quiet — all five gate-trail keys present, including
-        # the free-text note (the longest line the code can emit)
-        "calibration": {f"duckdb_{n}_ms": 99.9 for n in qnames}
-        | {
-            "duckdb_q1_ms": 44.8,
-            "spark_empty_job_ms": 19.0,
-            "loadavg_1m": 6.89,
-            "pre_anchor_q1_ms": 51.3,
-            "loadavg_first_attempt": 7.12,
-            "pre_anchor_first_attempt_ms": 52.8,
-            "load_gate_waited_s": 90,
-            "load_gate_note": (
-                "not confirmed quiet (load 6.89, anchor 51.3 ms after "
-                "90s; None = signal unreadable); timings may carry "
-                "contention"
-            ),
-            "steal_cores_avg": 1.13,
-            # r11 additive calibration fields (ADVICE r10)
-            "steal_cores_primary": 0.07,
-            "load_gate": "bypassed (SPARK_GRAFT_LOAD_GATE=0)",
-        },
-        # r11 heavy-registry block (VERDICT r10 task 7)
-        "registry_top": {
-            "queries": {
-                "q_wd_subclass_closure": 1.7123,
-                "q_retrieval_mmr": 1.8312,
-                "q_graph_bfs": 2.8812,
-                "q_orders_rfm": 1.6912,
-                "q_stream_stream_join": 3.6012,
-            },
-            "total_s": 11.7171,
-        },
-        "errors": {"tfidf": "z" * 400},
-    }
-    compact = bench_mod.compact_result(full)
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= bench_mod.COMPACT_BUDGET, len(line)
-    assert compact["queries"] == queries  # primary medians verbatim
-    assert compact["value"] == 2.9876
-    assert compact["scaled"]["ratio_vs_duckdb_4t"]
-    assert compact["scaled"]["ratio_adj_4t"]
-    # per-twin calibration rows collapse; anchors + full gate trail pass
-    assert compact["calibration"]["duckdb_q1_ms"] == 44.8
-    assert compact["calibration"]["spark_empty_job_ms"] == 19.0
-    assert compact["calibration"]["load_gate_note"].startswith("not confirmed")
-    assert compact["calibration"]["pre_anchor_first_attempt_ms"] == 52.8
-    assert compact["calibration"]["steal_cores_avg"] == 1.13
-    assert "duckdb_tfidf_ms" not in compact["calibration"]
-    assert compact["calibration"]["steal_cores_primary"] == 0.07
-    assert compact["calibration"]["load_gate"].startswith("bypassed")
-    assert compact["registry_top"]["queries"]["q_graph_bfs"] == 2.8812
-    assert compact["registry_top"]["total_s"] == 11.7171
-    assert compact["detail"] == "BENCH_DETAIL.json"
-    # pathological inflation still degrades to a parseable under-budget line
-    full["scaled"]["ratio_vs_duckdb_4t"] = {f"q{i}": 1.0 for i in range(400)}
-    full["scaled"]["ratio_adj_4t"] = {f"q{i}": 1.0 for i in range(400)}
-    compact2 = bench_mod.compact_result(full)
-    assert len(json.dumps(compact2, separators=(",", ":"))) <= bench_mod.COMPACT_BUDGET
-    assert compact2["queries"] == queries

@@ -1,7 +1,7 @@
 """The flagship q1-style pricing summary, parameterized by scale dir.
 
 Scan → filter (pushed to parquet) → hash agg (partial+final) → sort.
-Used by ``__spark_entry__.entry`` (sf0.001) and ``bench.py`` (sf0.1).
+Used by ``__spark_entry__.entry`` (sf0.001) and ``perfbench`` (sf0.1).
 """
 
 from __future__ import annotations

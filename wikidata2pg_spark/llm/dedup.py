@@ -281,6 +281,7 @@ def q_dedup_semantic_cluster(spark, sf_dir):
         _cell_pairs_kernel,
         _derived_blocks,
     )
+    from wikidata2pg_spark.operators.graph import min_label_components
 
     # same threshold-pairs kernel as q_sim_cosine_neardup (shared — the
     # ordered-pair guard and threshold comparison live in one place)
@@ -297,15 +298,10 @@ def q_dedup_semantic_cluster(spark, sf_dir):
     # full blocked cosine matmul from lineage (k rounds = k matmuls).
     sym = truncate_plan(sym)
     # labels seed from ALL vectors — singletons are their own cluster.
-    # r10 review catch: this loop was a near-verbatim copy of
-    # _min_label_components below; both got the convergence rewrite this
-    # round, so they are consolidated onto the shared helper (identical
-    # semantics: min-label propagation, per-round checkpoint,
-    # filter-count convergence, loud non-convergence failure).
     nodes = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id")
     )
-    labels = _min_label_components(nodes, sym, "q_dedup_semantic_cluster")
+    labels = min_label_components(nodes, sym, "q_dedup_semantic_cluster")
     return labels.select(
         F.col("id").alias("vec_id"),
         F.col("cluster").alias("cluster_id"),
@@ -530,48 +526,6 @@ def q_dedup_incremental(spark, sf_dir):
     )
 
 
-def _min_label_components(nodes, sym, what: str, max_rounds: int = 100):
-    """Distributed connected components via min-label propagation over a
-    symmetric, pre-checkpointed edge frame — shared by
-    q_pipeline_neardup and q_dedup_semantic_cluster (the latter's inline
-    copy was folded in here in r10 when both received the same
-    convergence rewrite). Each
-    round is one edge->label join + hash agg; only the changed-count
-    scalar reaches the driver; lineage is truncated per round. Raises on
-    non-convergence — a partial propagation is wrong data, not a result."""
-    labels = nodes.select("id", F.col("id").alias("cluster"))
-    for _ in range(max_rounds):
-        nbr_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy(F.col("a").alias("id2"))
-            .agg(F.min("cluster").alias("nbr_cluster"))
-        )
-        # r10 (guide §2.4): carry the previous cluster through the
-        # checkpoint so convergence is a filter+count over the already
-        # materialized round, not a re-join of old vs new labels — one
-        # fewer shuffle join per iteration (the
-        # q_wd_connected_components rewrite, measured there 2.73 ->
-        # 2.39 s at sf0.01, values identical).
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.id2, "left")
-            .select(
-                "id",
-                F.col("cluster").alias("old_cluster"),
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("nbr_cluster"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-        )
-        new_labels = truncate_plan(new_labels)
-        changed = new_labels.filter(
-            F.col("cluster") != F.col("old_cluster")
-        ).count()
-        labels = new_labels.select("id", "cluster")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"{what}: label propagation did not converge")
-
-
 @query(
     "q_pipeline_neardup",
     oracle="""
@@ -624,6 +578,8 @@ def q_pipeline_neardup(spark, sf_dir):
     join only shuffles rare-token postings; propagation is one keyed
     join + agg per round on a checkpointed edge set, rounds bounded by
     component diameter (near-dup clusters are shallow)."""
+    from wikidata2pg_spark.operators.graph import min_label_components
+
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
@@ -634,7 +590,7 @@ def q_pipeline_neardup(spark, sf_dir):
         .distinct()
     )
     nodes = docs.select(F.col("doc_id").alias("id"))
-    labels = _min_label_components(nodes, sym, "q_pipeline_neardup")
+    labels = min_label_components(nodes, sym, "q_pipeline_neardup")
     return labels.select(
         F.col("id").alias("doc_id"),
         F.col("cluster").alias("component"),

@@ -22,6 +22,7 @@ from pyspark.sql import Window, functions as F
 
 from wikidata2pg_spark.registry import query
 from wikidata2pg_spark.tables import load
+from wikidata2pg_spark.util import truncate_plan
 
 
 def _vec_double(col):
@@ -1173,14 +1174,14 @@ def _audit_corpus_frame(spark, sf_dir):
             F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, b: a + b
         )
 
-    return emb.select(
+    return truncate_plan(emb.select(
         "vec_id",
         d.alias("emb"),
         _sign_word(1, 32).alias("w1"),
         _sign_word(33, 64).alias("w2"),
         sq(d).alias("nrm"),
         sq(F.slice(d, 1, _TRUNC_D)).alias("tnrm"),
-    ).localCheckpoint()
+    ))
 
 
 @query(

@@ -15,6 +15,7 @@ from pyspark.sql import Window, functions as F
 from wikidata2pg_spark.llm.dedup import canon_sql, canon_text
 from wikidata2pg_spark.registry import query
 from wikidata2pg_spark.tables import load
+from wikidata2pg_spark.util import truncate_plan
 
 _STOPWORDS = ["the", "a"]
 # the same list, rendered for the DuckDB oracles — extending _STOPWORDS
@@ -1589,11 +1590,11 @@ def q_text_jsd_sources(spark, sf_dir):
     axis — at 100 TB the corpus is touched once and every later stage
     is vocabulary-bounded."""
     d = load(spark, sf_dir, "documents")
-    c = (
+    # feeds totals, vocab, and the dense grid
+    c = truncate_plan(
         d.select("source", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # feeds totals, vocab, and the dense grid
     )
     return jsd_pairs_frame(c)
 
@@ -1707,7 +1708,8 @@ def q_text_hill_tail(spark, sf_dir):
     # partial top-k — and the checkpoint then snapshots 51 rows, not the
     # whole ranked corpus (the q_dq_freshness review-catch class;
     # plan-asserted in test_plans.py)
-    r = (
+    # feeds the top-k terms AND the k+1 reference
+    r = truncate_plan(
         d.select(
             "n_chars",
             F.row_number()
@@ -1716,7 +1718,6 @@ def q_text_hill_tail(spark, sf_dir):
             .alias("rn"),
         )
         .filter(F.col("rn") <= _HILL_K + 1)
-        .localCheckpoint()  # feeds the top-k terms AND the k+1 reference
     )
     ref = r.filter(F.col("rn") == _HILL_K + 1).select(
         F.col("n_chars").alias("x_ref")
@@ -1818,7 +1819,8 @@ def q_text_bigram_entropy(spark, sf_dir):
     from wikidata2pg_spark.operators.analytics import ordered_fold
 
     d = load(spark, sf_dir, "documents")
-    b = (
+    # feeds both marginals, the total, the fold
+    b = truncate_plan(
         d.select(F.explode(_bigrams("text")).alias("bg"))
         .select(
             F.split(F.col("bg"), " ")[0].alias("w1"),
@@ -1826,7 +1828,6 @@ def q_text_bigram_entropy(spark, sf_dir):
         )
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint()  # feeds both marginals, the total, the fold
     )
     m1 = b.groupBy("w1").agg(F.sum("c12").alias("c1"))
     m2 = b.groupBy("w2").agg(F.sum("c12").alias("c2"))

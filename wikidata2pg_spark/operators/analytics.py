@@ -30,6 +30,7 @@ from pyspark.sql import Window, functions as F
 
 from wikidata2pg_spark.registry import query
 from wikidata2pg_spark.tables import load
+from wikidata2pg_spark.util import truncate_plan
 
 _SPAN_MIN = 30  # each event opens a 30-minute activity interval
 
@@ -63,9 +64,7 @@ def contingency_fold(x, rk: str, ck: str):
     IEEE-identical double ops — and the cross-cell sum is one
     pinned-order fold (ordered_fold's 0.0 seed == DuckDB list_reduce's
     first-element seed since 0.0 + x == x)."""
-    cells = (
-        x.groupBy(rk, ck).agg(F.count(F.lit(1)).alias("o")).localCheckpoint()
-    )
+    cells = truncate_plan(x.groupBy(rk, ck).agg(F.count(F.lit(1)).alias("o")))
     r = cells.groupBy(rk).agg(F.sum("o").alias("r"))
     c = cells.groupBy(ck).agg(F.sum("o").alias("c"))
     n = cells.agg(F.sum("o").alias("n"))
@@ -450,18 +449,17 @@ def q_pareto_abc(spark, sf_dir):
 
     li = load(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    r = (
+    # Materialize the per-part aggregate ONCE: three consumers read it
+    # (the bucket range probe, the within-bucket window, the bucket
+    # totals) and Catalyst does not dedupe sibling subtrees — without
+    # this the plan re-scans lineitem four times (observed; the
+    # q_dedup_semantic_cluster precedent). The checkpoint holds only
+    # |parts| rows, negligible at any scale next to a lineitem scan.
+    r = truncate_plan(
         li.select("l_partkey", cents.alias("c"))
         .groupBy("l_partkey")
         .agg(F.sum("c").alias("cents"))
         .withColumn("neg", -F.col("cents"))
-        # Materialize the per-part aggregate ONCE: three consumers read it
-        # (the bucket range probe, the within-bucket window, the bucket
-        # totals) and Catalyst does not dedupe sibling subtrees — without
-        # this the plan re-scans lineitem four times (observed; the
-        # q_dedup_semantic_cluster precedent). The checkpoint holds only
-        # |parts| rows, negligible at any scale next to a lineitem scan.
-        .localCheckpoint()
     )
     parts = ordered_bucket(r, "neg", 8)
     # asc_nulls_last pairs with ordered_bucket's NULL-to-last-bucket
@@ -568,7 +566,15 @@ def q_orders_rfm(spark, sf_dir):
     ties break on the unique custkey."""
     o = load(spark, sf_dir, "orders")
     dmax = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("dmax"))
-    c = (
+    # r10: materialize the per-customer aggregate once — it feeds the
+    # three two-pass distributed NTILEs plus the final three joins, and
+    # Catalyst does not dedupe sibling subtrees, so the orders
+    # scan+agg re-executed ~7x (52 scans in the unrolled plan; guide
+    # §5 localCheckpoint note / §3.3). One row per customer, the same
+    # distributed-materialization size every downstream pass already
+    # shuffles. Measured build+exec 3.9 -> 2.4 s at sf0.01,
+    # 5.1 -> 1.7 s at sf0.1; values identical.
+    c = truncate_plan(
         o.groupBy("o_custkey")
         .agg(
             F.max(F.col("o_orderdate").cast("date")).alias("dlast"),
@@ -584,15 +590,6 @@ def q_orders_rfm(spark, sf_dir):
             "f",
             "m_cents",
         )
-        # r10: materialize the per-customer aggregate once — it feeds the
-        # three two-pass distributed NTILEs plus the final three joins, and
-        # Catalyst does not dedupe sibling subtrees, so the orders
-        # scan+agg re-executed ~7x (52 scans in the unrolled plan; guide
-        # §5 localCheckpoint note / §3.3). One row per customer, the same
-        # distributed-materialization size every downstream pass already
-        # shuffles. Measured build+exec 3.9 -> 2.4 s at sf0.01,
-        # 5.1 -> 1.7 s at sf0.1; values identical.
-        .localCheckpoint()
     )
     r = _ntile5(c, "r_days", True, "r_score")
     fsc = _ntile5(c, "f", False, "f_score")
@@ -3301,7 +3298,10 @@ def q_agg_smoothed_rate(spark, sf_dir):
     is the same pattern. Plan: one per-user combine, one 1-row global
     rollup derived FROM it (never a second events scan), broadcast
     back. One events pass at 100 TB."""
-    u = (
+    # two consumers (the global rollup and the projection) — pin the
+    # |users|-row aggregate so events is scanned once (the
+    # q_pareto_abc localCheckpoint precedent)
+    u = truncate_plan(
         load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
@@ -3310,10 +3310,6 @@ def q_agg_smoothed_rate(spark, sf_dir):
                 F.when(F.col("event_type") == "purchase", 1).otherwise(0)
             ).alias("conv"),
         )
-        # two consumers (the global rollup and the projection) — pin the
-        # |users|-row aggregate so events is scanned once (the
-        # q_pareto_abc localCheckpoint precedent)
-        .localCheckpoint()
     )
     g = u.agg(F.sum("n").alias("gn"), F.sum("conv").alias("gc"))
     j = u.crossJoin(F.broadcast(g))
@@ -3828,7 +3824,8 @@ def q_time_lag_corr(spark, sf_dir):
     shared closed-form float expression (the q_graph_assortativity
     discipline). Plan: one day-rollup collapses the scan; the 7-lag
     band join and moment rollups run on |days| rows."""
-    d = (
+    # two self-join sides + 7 lags consume this |days|-row aggregate
+    d = truncate_plan(
         load(spark, sf_dir, "events")
         .select(
             F.floor(F.unix_micros("ts") / F.lit(86400000000))
@@ -3850,8 +3847,6 @@ def q_time_lag_corr(spark, sf_dir):
                 ).otherwise(0)
             ).alias("buys"),
         )
-        # two self-join sides + 7 lags consume this |days|-row aggregate
-        .localCheckpoint()
     )
     lags = spark.range(-_LAG_MAX, _LAG_MAX + 1).select(
         F.col("id").cast("long").alias("lag")
@@ -4485,12 +4480,11 @@ def q_time_decompose(spark, sf_dir):
         )
     ).cast("long")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    daily = (
+    daily = truncate_plan(
         load(spark, sf_dir, "orders")
         .select(day.alias("day"), cents.alias("c"))
         .groupBy("day")
         .agg(F.sum("c").alias("value_c"))
-        .localCheckpoint()
     )
     w = Window.orderBy("day").rangeBetween(-3, 3)
     t = daily.select(
@@ -4499,13 +4493,13 @@ def q_time_decompose(spark, sf_dir):
         F.sum("value_c").over(w).alias("trend_u"),
         F.count(F.lit(1)).over(w).alias("cnt7"),
     ).filter(F.col("cnt7") == 7)
-    f = t.select(
+    f = truncate_plan(t.select(
         "day",
         (F.col("day") % 7).alias("wd"),
         "value_c",
         (7 * F.col("value_c") - F.col("trend_u")).alias("detr_u"),
         "trend_u",
-    ).localCheckpoint()
+    ))
     s = f.groupBy("wd").agg(
         F.sum("detr_u").alias("s_sum"), F.count(F.lit(1)).alias("s_cnt")
     )
@@ -5026,12 +5020,11 @@ def q_time_forecast_accuracy(spark, sf_dir):
         )
     ).cast("long")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    daily = (
+    daily = truncate_plan(
         load(spark, sf_dir, "orders")
         .select(day.alias("day"), cents.alias("c"))
         .groupBy("day")
         .agg(F.sum("c").alias("v"))
-        .localCheckpoint()
     )
     f = daily.select(
         (F.col("day") + 7).alias("fday"), F.col("v").alias("forecast")
@@ -5228,7 +5221,7 @@ def _monthly_revenue_by_priority(spark, sf_dir):
     the multi-consumer fan-out)."""
     o = load(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    return (
+    return truncate_plan(
         o.groupBy(
             F.col("o_orderpriority").alias("priority"),
             (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
@@ -5236,7 +5229,6 @@ def _monthly_revenue_by_priority(spark, sf_dir):
             .alias("ym"),
         )
         .agg(F.sum(cents).alias("v"))
-        .localCheckpoint()
     )
 
 
@@ -5380,11 +5372,11 @@ def xmr_frame(d):
     """XmR control-chart core over a (day, v) series frame — the
     production expression tree, importable for worked-example tests.
     ``v`` must be an exact integer (cents)."""
-    # localCheckpoint: the lagged series feeds both the 1-row moment
+    # truncate_plan: the lagged series feeds both the 1-row moment
     # aggregate and the violation filter (sibling-consumer rule).
-    l_ = d.withColumn(
+    l_ = truncate_plan(d.withColumn(
         "prev", F.lag("v").over(Window.orderBy("day"))
-    ).localCheckpoint()
+    ))
     stats = l_.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("v").alias("sv"),
@@ -5501,12 +5493,11 @@ def q_time_strength(spark, sf_dir):
         )
     ).cast("long")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    daily = (
+    daily = truncate_plan(
         load(spark, sf_dir, "orders")
         .select(day.alias("day"), cents.alias("c"))
         .groupBy("day")
         .agg(F.sum("c").alias("value_c"))
-        .localCheckpoint()
     )
     return strength_from_daily(daily)
 
@@ -5517,7 +5508,8 @@ def strength_from_daily(daily):
     (pure trend + pure weekly seasonality -> both strengths exactly
     1.0) drives the exact code path."""
     w = Window.orderBy("day").rangeBetween(-3, 3)
-    f = (
+    # feeds the seasonal agg and the join
+    f = truncate_plan(
         daily.select(
             "day",
             "value_c",
@@ -5531,7 +5523,6 @@ def strength_from_daily(daily):
             "value_c",
             (7 * F.col("value_c") - F.col("trend_u")).alias("detr_u"),
         )
-        .localCheckpoint()  # feeds the seasonal agg and the join
     )
     s = f.groupBy("wd").agg(
         F.sum("detr_u").alias("s_sum"), F.count(F.lit(1)).alias("s_cnt")
@@ -5704,12 +5695,12 @@ def q_dq_freshness(spark, sf_dir):
     # the checkpoint — checkpointing the raw row projection would
     # materialize the whole fact table (review catch); every output is
     # derivable from the per-day counts
-    d = (
+    # feeds the frontier and the per-feed rollup
+    d = truncate_plan(
         o.groupBy(
             F.col("o_orderpriority").alias("priority"), day.alias("day")
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()  # feeds the frontier and the per-feed rollup
     )
     g = d.agg(F.max("day").alias("gmax"))
     j = d.crossJoin(F.broadcast(g))

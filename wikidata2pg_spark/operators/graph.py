@@ -24,15 +24,23 @@ this module covers the *relational* graph surface]:
   Spark side and the DuckDB oracle implement the identical recurrence so
   the comparison is exact. At 100 TB the rank table stays partitioned by
   id across iterations and each round is one co-partitioned join — with
-  `localCheckpoint` every few rounds to truncate lineage (not needed at
-  3 rounds; see q_wd_connected_components for the checkpointed loop).
+  a lineage cut every few rounds (not needed at 3 rounds; see
+  ``min_label_components`` for the checkpointed loop).
 
-Checkpoint posture (r11, VERDICT r10 task 6): every truncation point in
-this module goes through ``util.truncate_plan`` — ``localCheckpoint`` by
-default (right for this harness; blocks on executor-local storage, an
-executor loss fails the job instead of recomputing), switchable to the
-fault-tolerant ``DataFrame.checkpoint`` API for cluster deployments via
-``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``.
+The iterative kernels shared across the package live here too:
+``semi_naive_closure`` (bounded transitive closure) and
+``min_label_components`` (connected components, used by
+q_wd_connected_components, q_dedup_semantic_cluster and
+q_pipeline_neardup).
+
+Checkpoint posture: every lineage cut in the package goes through
+``util.truncate_plan`` — ``localCheckpoint`` by default (blocks on
+executor-local storage; an executor loss fails the job instead of
+recomputing), switchable to the fault-tolerant ``DataFrame.checkpoint``
+API via ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``. The reliable path needs a
+checkpoint directory on shared storage, set with
+``SparkContext.setCheckpointDir``; ``truncate_plan`` raises when none is
+configured rather than falling back to driver-local disk.
 """
 
 from __future__ import annotations
@@ -109,6 +117,52 @@ def semi_naive_closure(e, max_depth=4):
         ))
         reach = reach.unionByName(frontier)
     return reach
+
+
+def min_label_components(nodes, sym, what: str, max_rounds: int = 100):
+    """Distributed connected components via min-label propagation over
+    node frame ``nodes`` (id) and a symmetric, pre-checkpointed edge frame
+    ``sym`` (a, b); returns (id, cluster) with cluster = the minimum id in
+    the node's component. Labels start as each node's own id and every
+    round takes the min over the neighborhood: one edge->label join + hash
+    agg, lineage cut per round, and only the changed-count scalar reaches
+    the driver, so the label table stays partitioned by id across rounds.
+    Rounds are bounded by graph diameter. Raises ``RuntimeError`` naming
+    ``what`` after ``max_rounds`` without a fixpoint — a partial
+    propagation splits one component into several, which is wrong data,
+    not a result."""
+    labels = nodes.select("id", F.col("id").alias("cluster"))
+    for _ in range(max_rounds):
+        nbr_min = (
+            sym.join(labels, sym.b == labels.id)
+            .groupBy(F.col("a").alias("id2"))
+            .agg(F.min("cluster").alias("nbr_cluster"))
+        )
+        # carry the previous cluster through the checkpoint so convergence
+        # is a filter+count over the already materialized round, not a
+        # re-join of old vs new labels — one fewer shuffle join per round
+        # (measured 2.73 -> 2.39 s on q_wd_connected_components at
+        # sf0.01, values identical).
+        new_labels = truncate_plan(
+            labels.join(nbr_min, labels.id == nbr_min.id2, "left")
+            .select(
+                "id",
+                F.col("cluster").alias("old_cluster"),
+                F.least(
+                    F.col("cluster"), F.coalesce(F.col("nbr_cluster"), F.col("cluster"))
+                ).alias("cluster"),
+            )
+        )
+        changed = new_labels.filter(
+            F.col("cluster") != F.col("old_cluster")
+        ).count()
+        labels = new_labels.select("id", "cluster")
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"{what}: min-label propagation did not converge within "
+        f"{max_rounds} rounds (graph diameter exceeds the bound)"
+    )
 
 
 _COPURCHASE_EDGES_CTE = """lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),

@@ -38,6 +38,7 @@ from pyspark.sql import Window, functions as F
 from wikidata2pg_spark.operators.analytics import _REV_U_SQL, _rev_u
 from wikidata2pg_spark.registry import query
 from wikidata2pg_spark.tables import load
+from wikidata2pg_spark.util import truncate_plan
 
 # Exact integer units (see module docstring): price cents, discount %,
 # tax % — BIGINT on both sides.
@@ -531,7 +532,7 @@ def q_sql_tpch_q15(spark, sf_dir):
     scale the per-supplier aggregate is ~1e9 rows — a full-frame
     window would single-partition it; the broadcast-scalar shape
     stays distributed."""
-    rev = (
+    rev = truncate_plan(
         load(spark, sf_dir, "lineitem")
         .filter(
             (
@@ -545,7 +546,6 @@ def q_sql_tpch_q15(spark, sf_dir):
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(_rev_u()).alias("total_u"))
-        .localCheckpoint()
     )
     mx = rev.agg(F.max("total_u").alias("mx"))
     winners = rev.join(

@@ -3,14 +3,14 @@
 Two entry shapes matter:
   * the driver hands us an already-built SparkSession (t1/t2) — we may only
     set RUNTIME confs on it (``configure_session``);
-  * our own tests/bench build the session (``get_session``) — there we also
-    set builder-time confs.
+  * the CLI, the tests, the tools and ``perfbench/`` build the session
+    (``get_session``) — there we also set builder-time confs.
 
 Scale posture (SURVEY.md §4): AQE on (runtime re-planning, skew-join
 splitting), UTC timestamps, the parquet TIMESTAMP(NANOS) legacy flag
 (FIXTURES.md ⚠ — Spark 4.1.2 hard-errors on the events table without it),
-and shuffle partitions sized to the scale factor under test (the 200-part
-default dominates ms-scale benchmarks; on a real cluster AQE coalesces).
+and shuffle partitions sized to the box (the 200-part default dominates
+ms-scale queries; on a real cluster AQE coalesces).
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ def configure_session(spark: SparkSession) -> SparkSession:
     Marks the session configured so tables.load() will NOT re-apply
     RUNTIME_CONFS later — re-application would silently clobber any conf a
     caller set between here and its first load() (the verify-skill gotcha
-    that cost the AQE skew test an hour, and would reset the bench's
+    that cost the AQE skew test an hour, and would reset get_session's
     shuffle sizing)."""
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -61,24 +61,19 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_session(
-    app_name: str = "wikidata2pg_spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_session(app_name: str = "wikidata2pg_spark") -> SparkSession:
     """Build (or reuse) a local session sized for this box.
 
-    local[N] with N from $SPARK_GRAFT_CPUS (default 32); shuffle partitions
-    default to min(2*cpus, 32) — small SFs shouldn't pay 200-partition
-    scheduling overhead, and AQE coalesces further at runtime.
+    local[N] with N from $SPARK_GRAFT_CPUS (default: the CPUs this process
+    may run on); shuffle partitions min(N, 16) — small inputs shouldn't
+    pay 200-partition scheduling overhead, and AQE coalesces further at
+    runtime.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None and "SPARK_GRAFT_SHUFFLE" in os.environ:
-        shuffle_partitions = int(os.environ["SPARK_GRAFT_SHUFFLE"])
-    if shuffle_partitions is None:
-        # 16, not 2*cpus: measured on join3@sf0.1 — 16 parts 0.96s vs 32
-        # parts 1.19s (task-scheduling overhead dominates ms-scale stages;
-        # AQE coalesces/splits adaptively at real scale anyway).
-        shuffle_partitions = min(cpus, 16)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    # 16, not 2*cpus: measured on join3@sf0.1 — 16 parts 0.96s vs 32
+    # parts 1.19s (task-scheduling overhead dominates ms-scale stages;
+    # AQE coalesces/splits adaptively at real scale anyway).
+    shuffle_partitions = min(cpus, 16)
     b = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

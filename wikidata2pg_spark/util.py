@@ -2,7 +2,7 @@
 
 Roundtrip queries (sinks, foreachBatch, bucketed tables) write once per
 sf_dir under a deterministic temp location and skip straight to the read
-path on repeat invocations (t2 reruns, bench warm loops) — keyed on the
+path on repeat invocations (t2 reruns, warm benchmark loops) — keyed on the
 committer's ``_SUCCESS`` marker so an uncommitted partial write is never
 mistaken for data.
 """
@@ -78,95 +78,15 @@ def tmpdir_for(sf_dir: str, tag: str, *source_tables: str) -> str:
     return tmpdir(sf_dir, f"{tag}-{source_stamp(sf_dir, *source_tables)}")
 
 
-# Fact tables that grow with scale, and the key columns that must stay
-# DISJOINT per replica so join cardinalities and group counts scale
-# LINEARLY — naively duplicating rows would square every key-equality
-# join's fan-out (10x lineitem JOIN 10x orders on a duplicated orderkey
-# matches 100 copies per original pair) and collapse per-key groups into
-# 10x-deep ones, which is not what a bigger corpus looks like.
-SCALE_OFFSET_KEYS = {
-    "lineitem": ("l_orderkey",),
-    "orders": ("o_orderkey", "o_custkey"),
-    "customer": ("c_custkey",),
-    "events": ("event_id", "user_id"),
-    "documents": ("doc_id",),
-}
-# FK edges must move together: the same offset base is shared by both
-# sides of each key family.
-_OFFSET_GROUP = {
-    "l_orderkey": "orderkey",
-    "o_orderkey": "orderkey",
-    "o_custkey": "custkey",
-    "c_custkey": "custkey",
-    "event_id": "event_id",
-    "user_id": "user_id",
-    "doc_id": "doc_id",
-}
-
-
-def scale_fixture_tables(
-    src_sf_dir: str, dst_dir: str, factor: int, row_groups: int = 16, tables=None
-) -> dict[str, int]:
-    """Write a ``factor``x scaled copy of the fixtures under ``dst_dir``:
-    fact tables are replicated ``factor`` times with per-replica key
-    offsets (SCALE_OFFSET_KEYS — replica i's keys live in a disjoint
-    range, so every join/group cardinality scales linearly, the sf1-like
-    shape), dimension tables (region/nation/part/supplier/embeddings)
-    copy through unchanged — exactly how dimensions behave at real
-    scale. Each output file carries ~``row_groups`` row groups so both
-    engines can parallelize inside the single file (the multifile demo
-    covers the many-files layout; this covers the many-row-groups one).
-    Returns {table: rows_written}."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from wikidata2pg_spark.tables import TABLE_NAMES
-
-    names = list(tables) if tables is not None else TABLE_NAMES
-    loaded = {t: pq.read_table(f"{src_sf_dir}/{t}.parquet") for t in names}
-    base: dict[str, int] = {}
-    for t, cols in SCALE_OFFSET_KEYS.items():
-        if t not in loaded:
-            continue
-        for c in cols:
-            g = _OFFSET_GROUP[c]
-            m = pc.max(loaded[t].column(c)).as_py() or 0
-            base[g] = max(base.get(g, 0), int(m) + 1)
-    rows: dict[str, int] = {}
-    for t in names:
-        tbl = loaded[t]
-        if t in SCALE_OFFSET_KEYS:
-            copies = []
-            for i in range(factor):
-                ti = tbl
-                for c in SCALE_OFFSET_KEYS[t]:
-                    idx = ti.schema.get_field_index(c)
-                    fld = ti.schema.field(c)
-                    off = pa.scalar(i * base[_OFFSET_GROUP[c]], type=fld.type)
-                    ti = ti.set_column(idx, fld, pc.add(ti.column(c), off))
-                copies.append(ti)
-            out = pa.concat_tables(copies)
-        else:
-            out = tbl
-        rg = max(4096, -(-out.num_rows // row_groups))
-        pq.write_table(
-            out, os.path.join(dst_dir, f"{t}.parquet"), row_group_size=rg
-        )
-        rows[t] = out.num_rows
-    return rows
-
-
 def split_fixture_tables(
     src_sf_dir: str, dst_dir: str, n_files: int, tables=None
 ) -> None:
     """Split fixture tables of ``src_sf_dir`` into an ``n_files``-part
     directory-style parquet layout under ``dst_dir`` — the multi-split
-    layout a real corpus has. Single implementation shared by the bench
-    scale demo and the partition-invariance test fixture so the two can't
-    drift (file count aside, which is the caller's knob). ``tables``
-    restricts the split to a subset (e.g. a plan test that reads only
-    events need not rewrite all ten tables)."""
+    layout a real corpus has. Shared by the partition-invariance, TPC-H
+    extension and plan test fixtures (file count is the caller's knob).
+    ``tables`` restricts the split to a subset (e.g. a plan test that reads
+    only events need not rewrite all ten tables)."""
     import pyarrow.parquet as pq
 
     from wikidata2pg_spark.tables import TABLE_NAMES
@@ -188,22 +108,21 @@ def truncate_plan(df, eager: bool = True):
     whose plan no longer embeds the upstream derivation.
 
     Default: ``localCheckpoint`` — blocks live on executor local
-    disk/memory, which is the cheap, right call in this harness and on
-    healthy clusters, but it SEVERS lineage: an executor loss makes the
-    job fail rather than recompute (guide §5). The 100 TB posture for
-    long iterative jobs is RELIABLE checkpointing: set
-    ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` (with a checkpoint dir, either
-    pre-configured via ``spark.checkpoint.dir`` /
-    ``SparkContext.setCheckpointDir`` or defaulting to a local tmp dir
-    here) and every truncation point in the iterative family goes
-    through the fault-tolerant ``DataFrame.checkpoint`` API instead —
-    same plan truncation, recomputable-from-storage blocks. One switch,
-    no per-call-site edits (VERDICT r10 task 6)."""
+    disk/memory, which is cheap and right on a single box or a healthy
+    cluster, but it SEVERS lineage: an executor loss makes the job fail
+    rather than recompute (guide §5). For long iterative jobs on a
+    cluster set ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``: every truncation
+    point then goes through the fault-tolerant ``DataFrame.checkpoint``
+    API instead — same plan truncation, recomputable-from-storage
+    blocks. That needs a checkpoint directory on storage every executor
+    can reach, set with ``SparkContext.setCheckpointDir``; without one
+    this raises ``ValueError`` rather than guess a driver-local path."""
     if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                tempfile.mkdtemp(prefix="spark_graft_reliable_ckpt_")
+        if df.sparkSession.sparkContext.getCheckpointDir() is None:
+            raise ValueError(
+                "SPARK_GRAFT_RELIABLE_CHECKPOINT=1 needs a checkpoint "
+                "directory on shared storage: call "
+                "SparkContext.setCheckpointDir first"
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

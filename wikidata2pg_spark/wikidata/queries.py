@@ -505,17 +505,14 @@ FROM reach GROUP BY a
 """,
 )
 def q_wd_connected_components(spark, sf_dir):
-    """Iterative-algorithm extra: connected components via distributed
-    min-label propagation — labels start as each node's own id and every
-    iteration takes the min over the neighborhood, until a fixpoint. Each
-    iteration is one shuffle-join + hash-agg (fully distributed); only the
-    SMALL convergence scalar crosses to the driver, which is the correct
-    loop shape at 100 TB (label table stays partitioned by id across
-    iterations). The oracle is the transitive-closure recursive CTE —
-    tractable on the fixture, while the Spark form is the one that scales.
-    Iteration count is bounded by graph diameter (label prop converges in
-    O(diameter) rounds here since labels jump through the full
-    neighborhood each round)."""
+    """Iterative-algorithm extra: connected components of the item→item
+    claim graph via the shared ``operators.graph.min_label_components``
+    kernel (distributed min-label propagation: one join + hash-agg per
+    round, only the convergence scalar reaches the driver). The oracle is
+    the transitive-closure recursive CTE — tractable on the fixture, while
+    the Spark form is the one that scales."""
+    from wikidata2pg_spark.operators.graph import min_label_components
+
     e = flatten.item_edges(_latest(spark)).select("src", "dst").filter(
         F.col("dst").isNotNull()
     )
@@ -524,56 +521,15 @@ def q_wd_connected_components(spark, sf_dir):
         .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
     )
-    # Materialize the (static) symmetric edge set and each round's label
-    # table: the convergence count executes new_labels once and the next
-    # round consumes it again — without localCheckpoint, round N's plan
-    # would re-run all N-1 prior joins from source TWICE per round
-    # (O(N^2) recomputation and an unboundedly deep Catalyst plan).
+    # Materialize the (static) symmetric edge set: every propagation round
+    # joins it, and without the cut each round would re-run the dump parse.
     sym = truncate_plan(sym)
-    labels = truncate_plan(
-        sym.select("a")
-        .distinct()
-        .select(F.col("a").alias("id"), F.col("a").alias("component"))
+    nodes = sym.select(F.col("a").alias("id")).distinct()
+    # diameter bound; the fixture converges in <=3 rounds
+    labels = min_label_components(
+        nodes, sym, "q_wd_connected_components", max_rounds=20
     )
-    converged = False
-    for _ in range(20):  # diameter bound; fixture converges in <=3
-        nbr_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy(F.col("a").alias("id2"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # r10 (guide §2.4): carry the previous component through the
-        # checkpoint so convergence is a filter+count over the already
-        # materialized round — the old form re-joined new vs old labels,
-        # one extra shuffle join per iteration (measured 2.73 -> 2.39 s
-        # median at sf0.01, rows identical).
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.id2, "left")
-            .select(
-                "id",
-                F.col("component").alias("old_component"),
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                ).alias("component"),
-            )
-        )
-        new_labels = truncate_plan(new_labels)
-        changed = new_labels.filter(
-            F.col("component") != F.col("old_component")
-        ).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # silently returning unconverged labels would split one component
-        # into several with no signal — fail loudly; at real scale raise
-        # the bound or switch to pointer-jumping (O(log diameter) rounds)
-        raise RuntimeError(
-            "q_wd_connected_components: min-label propagation did not "
-            "converge within 20 rounds (graph diameter exceeds the bound)"
-        )
-    return labels
+    return labels.select("id", F.col("cluster").alias("component"))
 
 
 @query(
